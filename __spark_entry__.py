@@ -26,23 +26,16 @@ if _REPO_DIR not in sys.path:
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from jsonl_dataingestion_pipeline_spark.operators.common import (
+    memo,
+    parallelism_floor,
+)
+
 AS_OF = "2024-06-01"  # pinned clock for all today-relative operators
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _floor(df: DataFrame) -> DataFrame:
-    """Adaptive parallelism floor for scan-rooted frames feeding
-    CPU-heavy projections (optimization guide §2.5 input skew) — see
-    operators/common.py::parallelism_floor. No-op on many-split scans,
-    row-identical always."""
-    from jsonl_dataingestion_pipeline_spark.operators.common import (
-        parallelism_floor,
-    )
-
-    return parallelism_floor(df)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -334,7 +327,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries_full() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The COMPLETE internal registry: one entry per individual operator
-    query (143 of them). The driver-facing ``queries()`` (defined at the end
+    query (226 of them). The driver-facing ``queries()`` (defined at the end
     of this file) folds these into <=50 composed entries because the
     driver's correctness gate records at most the first 50 registry rows;
     bench.py and tests keep using this full registry by name."""
@@ -966,54 +959,49 @@ def q23_exact_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PLANTED_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _planted_neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents ∪ 10-token-truncated copies: (2·id, text), (2·id+1, trunc).
 
-    Cached per (session, sf_dir): three near-dup queries consume the same
+    Memoized per sf_dir: three near-dup queries consume the same
     corpus, so materialize the union once.
     """
-    key = (id(spark), sf_dir)
-    if key in _PLANTED_CACHE:
-        return _PLANTED_CACHE[key]
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    trunc = F.array_join(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 10, F.lit(1))), " "
-    )
-    full = d.select((F.col("doc_id") * 2).alias("id"), F.col("text"))
-    cut = d.select((F.col("doc_id") * 2 + 1).alias("id"), trunc.alias("text"))
-    # spread across every core before the checkpoint: the parquet union
-    # arrives in a handful of input splits, and everything downstream
-    # (shingling, signatures) inherits this layout
-    n_part = spark.sparkContext.defaultParallelism
-    corpus = (
-        full.unionAll(cut).repartition(n_part, "id").localCheckpoint(eager=True)
-    )
-    _PLANTED_CACHE[key] = corpus
-    return corpus
+
+    def build():
+        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+        toks = F.split(F.trim(F.col("text")), r"\s+")
+        trunc = F.array_join(
+            F.slice(toks, 1, F.greatest(F.size(toks) - 10, F.lit(1))), " "
+        )
+        full = d.select((F.col("doc_id") * 2).alias("id"), F.col("text"))
+        cut = d.select((F.col("doc_id") * 2 + 1).alias("id"), trunc.alias("text"))
+        # spread across every core before the checkpoint: the parquet union
+        # arrives in a handful of input splits, and everything downstream
+        # (shingling, signatures) inherits this layout
+        n_part = spark.sparkContext.defaultParallelism
+        return (
+            full.unionAll(cut).repartition(n_part, "id").localCheckpoint(eager=True)
+        )
+
+    return memo(spark, ("planted", sf_dir), build)
 
 
 def _planted_shingle_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shingle sets of the planted corpus, computed once per session:
+    """Shingle sets of the planted corpus, computed once per application:
     shingling is the dominant narrow step and q25/q26 share it verbatim."""
     from jsonl_dataingestion_pipeline_spark.operators.dedup import shingle_base
 
-    key = (id(spark), sf_dir + "#shingles")
-    if key in _PLANTED_CACHE:
-        return _PLANTED_CACHE[key]
-    base = shingle_base(
-        _planted_neardup_corpus(spark, sf_dir), "text", "id", shingle_k=3
+    return memo(
+        spark,
+        ("planted.shingles", sf_dir),
+        lambda: shingle_base(
+            _planted_neardup_corpus(spark, sf_dir), "text", "id", shingle_k=3
+        ),
     )
-    _PLANTED_CACHE[key] = base
-    return base
 
 
 def _planted_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled-shingle candidate pairs of the planted corpus, computed
-    once per session: q25 (Jaccard) and q163 (containment) verify the
+    once per application: q25 (Jaccard) and q163 (containment) verify the
     IDENTICAL candidate relation (same base, prefix "0", default cap),
     so the explode+md5+group candidate pass runs once, like the shared
     shingle base (guide §2.4)."""
@@ -1021,34 +1009,32 @@ def _planted_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sampled_shingle_candidates,
     )
 
-    key = (id(spark), sf_dir + "#candidates")
-    if key in _PLANTED_CACHE:
-        return _PLANTED_CACHE[key]
-    cand = sampled_shingle_candidates(
-        _planted_shingle_base(spark, sf_dir),
-        sample_hex_prefix="0",
-        op_name="planted_candidate_pairs",
+    return memo(
+        spark,
+        ("planted.candidates", sf_dir),
+        lambda: sampled_shingle_candidates(
+            _planted_shingle_base(spark, sf_dir),
+            sample_hex_prefix="0",
+            op_name="planted_candidate_pairs",
+        ),
     )
-    _PLANTED_CACHE[key] = cand
-    return cand
 
 
 def _audit_shingle_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle sets of the id < 300 audit slice, computed once per
-    session: q170's exact AND approximate legs plus q174's pair join
+    application: q170's exact AND approximate legs plus q174's pair join
     all consume the identical base — without sharing, each call pays
     the dominant explode+distinct+checkpoint step again."""
     from jsonl_dataingestion_pipeline_spark.operators.dedup import shingle_base
 
-    key = (id(spark), sf_dir + "#audit_shingles")
-    if key in _PLANTED_CACHE:
-        return _PLANTED_CACHE[key]
-    base = shingle_base(
-        _planted_neardup_corpus(spark, sf_dir).filter(F.col("id") < 300),
-        "text", "id", shingle_k=3,
+    return memo(
+        spark,
+        ("planted.audit_shingles", sf_dir),
+        lambda: shingle_base(
+            _planted_neardup_corpus(spark, sf_dir).filter(F.col("id") < 300),
+            "text", "id", shingle_k=3,
+        ),
     )
-    _PLANTED_CACHE[key] = base
-    return base
 
 
 def q24_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1684,9 +1670,6 @@ _DEDUP_SIM_QUERIES.update(
 )
 
 
-_Q40_CANON_CACHE: dict = {}
-
-
 def q40_shipment_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE shipment pipeline (clean -> D1-D7 -> T1-T7 -> D9-D11
     docs) on a canonical frame synthesized from orders. Fully
@@ -1695,13 +1678,7 @@ def q40_shipment_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle rebuilds both strings byte-for-byte (every leg/section of
     `operators/narrative.py` and `operators/content.py` restated in SQL),
     so a single wrong character anywhere in the 700-line narrative
-    assembly fails the hash check.
-
-    The ~130-column canonical projection is a pure function of the
-    schema constants, so its Column trees are memoized per application
-    (the established clean_columns idiom; the measured saving is small
-    — warm construction is Catalyst-analysis-bound, not py4j-bound —
-    but the rebuild cost was pure waste either way)."""
+    assembly fails the hash check."""
     from jsonl_dataingestion_pipeline_spark.plans.shipment import (
         build_documents,
         transform_shipments,
@@ -1709,22 +1686,6 @@ def q40_shipment_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonl_dataingestion_pipeline_spark.schema import CANONICAL_COLUMNS
 
     o = _t(spark, sf_dir, "orders")
-    cache_key = spark.sparkContext.applicationId
-    cached = _Q40_CANON_CACHE.get(cache_key)
-    if cached is not None:
-        canonical = o.select(*cached)
-        docs = build_documents(transform_shipments(canonical, as_of=AS_OF))
-        return docs.select(
-            "document_id",
-            F.col("metadata.shipment_status").alias("status"),
-            F.col("source_group"),
-            F.length("content").cast("int").alias("content_len"),
-            F.length(F.col("metadata.milestones")).cast("int").alias(
-                "milestones_len"
-            ),
-            F.md5(F.col("content")).alias("content_md5"),
-            F.md5(F.col("metadata.milestones")).alias("milestones_md5"),
-        )
     k = F.col("o_orderkey")
     d = F.col("o_orderdate").cast("date")
 
@@ -1773,9 +1734,6 @@ def q40_shipment_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         (filled[c] if c in filled else F.lit(None).cast("string")).alias(c)
         for c in CANONICAL_COLUMNS
     ]
-    while len(_Q40_CANON_CACHE) >= 4:  # bound: evict oldest entry
-        _Q40_CANON_CACHE.pop(next(iter(_Q40_CANON_CACHE), None), None)
-    _Q40_CANON_CACHE[cache_key] = projection
     canonical = o.select(*projection)
     docs = build_documents(transform_shipments(canonical, as_of=AS_OF))
     return docs.select(
@@ -6019,7 +5977,9 @@ def q111_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # floor before the two tokenize+explode passes (guide §2.5)
-    d = _floor(_t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1500))
+    d = parallelism_floor(
+        _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1500)
+    )
     scores = bigram_logprob(d, "text", "doc_id")
     return perplexity_buckets(scores).select(
         "doc_id", "n_bigrams", "mean_nll", "bucket"
@@ -7376,7 +7336,7 @@ _ORACLE_DEDUP_SIM["q129_rolling_stats"] = r"""
            -- float op chain as rolling_stats: cast -> /1e2 -> /n -> round
            ROUND(CAST(SUM(CAST(ROUND(value * 1e2) AS BIGINT)) OVER w
                       AS DOUBLE)
-                 / 1e2 / CAST(COUNT(*) OVER w AS DOUBLE), 6) AS roll_mean,
+                 / 1e2 / CAST(COUNT(value) OVER w AS DOUBLE), 6) AS roll_mean,
            ROUND(MIN(value) OVER w, 6) AS roll_min,
            ROUND(MAX(value) OVER w, 6) AS roll_max
     FROM (
@@ -9252,21 +9212,21 @@ def q160_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the from-scratch BASE labeling is the operator's precondition,
     # not the thing it sells — a production deployment reads it from
     # the label store (q98's streaming maintenance persists exactly
-    # this). Cache it per (session, sf_dir) so repeat invocations
+    # this). Memoize it per sf_dir so repeat invocations
     # (bench min-of-2) measure the incremental FOLD, which is the
     # operator (VERDICT r7 item #5). Deterministic: min-id labels are
     # canonical, so the cached and fresh base are identical.
-    bkey = (id(spark), sf_dir, "q160base")
-    if bkey not in _TRAINED_CACHE:
+    def build_base():
         base_nodes = (
             base_edges.select(F.col("id_l").alias("id"))
             .unionAll(base_edges.select(F.col("id_r").alias("id")))
             .distinct()
         )
-        _TRAINED_CACHE[bkey] = connected_components(
+        return connected_components(
             base_nodes, base_edges
         ).localCheckpoint(eager=True)
-    base = _TRAINED_CACHE[bkey]
+
+    base = memo(spark, ("q160base", sf_dir), build_base)
     out = incremental_connected_components(base, batch_edges)
     return out.select(
         F.col("id").alias("cc_node"), F.col("comp").alias("cc_comp")
@@ -10378,7 +10338,7 @@ def q147_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = e.filter(F.col("vec_id") % 40 == 0)
     # floor: |anchors| x |corpus| cosines otherwise run in the single
     # scan task (guide §2.5)
-    corpus = _floor(e.filter(F.col("vec_id") % 40 != 0))
+    corpus = parallelism_floor(e.filter(F.col("vec_id") % 40 != 0))
     return hard_negative_mining(
         corpus, anchors, k=5, lo=0.2, hi=0.4, exact=True
     )
@@ -10701,18 +10661,14 @@ _UNION_MERGES["q38_cosine_verify"].append(
 _PQ_DIM, _PQ_M, _PQ_NC, _PQ_IT = 64, 4, 4, 2
 _PQ_DSUB = _PQ_DIM // _PQ_M
 
-#: trained quantizers cached per (session, sf_dir, config) — q152+q153
-#: share one PQ training and q155+q156 one IVF-PQ training instead of
-#: re-running the iterative collect-per-round Lloyd jobs on every call
-#: (VERDICT r6 item 3; same pattern as _PLANTED_CACHE).
-_TRAINED_CACHE: dict = {}
-
 
 def _pq_trained(spark: SparkSession, sf_dir: str):
+    """Trained quantizer, memoized per sf_dir — q152+q153 share one PQ
+    training and q155+q156 one IVF-PQ training instead of re-running the
+    iterative collect-per-round Lloyd jobs on every call."""
     from jsonl_dataingestion_pipeline_spark.operators.pq import pq_train
 
-    key = (id(spark), sf_dir, "pq")
-    if key not in _TRAINED_CACHE:
+    def build():
         e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
         # train on a core-spread checkpoint: the corpus is one parquet
         # split at gate sizes, and training distances are interpreted
@@ -10724,14 +10680,15 @@ def _pq_trained(spark: SparkSession, sf_dir: str):
         spread = e.repartition(
             spark.sparkContext.defaultParallelism
         ).localCheckpoint(eager=True)
-        _TRAINED_CACHE[key] = (
+        return (
             e,
             pq_train(
                 spread, "embedding", "vec_id",
                 dim=_PQ_DIM, m=_PQ_M, n_codes=_PQ_NC, iterations=_PQ_IT,
             ),
         )
-    return _TRAINED_CACHE[key]
+
+    return memo(spark, ("pq", sf_dir), build)
 
 
 def q152_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10929,8 +10886,7 @@ def _ivfpq_trained(spark: SparkSession, sf_dir: str):
         ivfpq_train,
     )
 
-    key = (id(spark), sf_dir, "ivfpq")
-    if key not in _TRAINED_CACHE:
+    def build():
         e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
         # same train-on-spread / return-raw split as _pq_trained
         spread = e.repartition(
@@ -10942,8 +10898,9 @@ def _ivfpq_trained(spark: SparkSession, sf_dir: str):
             n_codes=_IPQ_NCODES,
             coarse_iterations=_IPQ_CIT, pq_iterations=_IPQ_PIT,
         )
-        _TRAINED_CACHE[key] = (e, coarse, cbs)
-    return _TRAINED_CACHE[key]
+        return e, coarse, cbs
+
+    return memo(spark, ("ivfpq", sf_dir), build)
 
 
 def q155_ivfpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11257,51 +11214,50 @@ _AUD_DELTAS = _aud_deltas()
 def _aud_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings(vec_id > 0) ∪ planted near-copies of vec 0, built
     with Spark expressions (F.round matches the oracle's ROUND) and
-    checkpointed once per (session, sf_dir) — training re-scans it
-    every Lloyd round."""
-    key = (id(spark), sf_dir, "audcorpus")
-    if key in _TRAINED_CACHE:
-        return _TRAINED_CACHE[key]
-    full = _t(spark, sf_dir, "embeddings")
-    e = full.filter(F.col("vec_id") > 0).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    q0 = full.filter(F.col("vec_id") == 0).select("embedding")
-    # the deltas ride as DATA (a 10-row frame), not as expressions: an
-    # expression form (10 x 64 round(element_at)+lit terms) blew the
-    # JVM's 64 KB generated-method limit and silently fell back to
-    # interpreted evaluation. One cross join of the 1-row q0 scan
-    # against the 10-row delta frame + a zip_with keeps the plan tiny;
-    # the arithmetic (round(x, 9) + delta) is unchanged.
-    deltas_df = spark.createDataFrame(
-        [
-            (_AUD_BASE_ID + j + 1, _AUD_DELTAS[j])
-            for j in range(_AUD_NPLANT)
-        ],
-        "vec_id long, delta array<double>",
-    )
-    planted = q0.crossJoin(F.broadcast(deltas_df)).select(
-        "vec_id",
-        F.zip_with(
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: F.round(x, 9),
-            ),
-            F.col("delta"),
-            lambda a, b: a + b,
-        ).alias("embedding"),
-    )
-    corpus = e.unionAll(planted)
-    # spread across every core before checkpointing: the union plan is
-    # (one parquet split) + 10 single-row legs = 11 partitions with one
-    # straggler carrying the whole corpus through the interpreted HOF
-    # distance folds (measured 16s -> ~4s at sf0.1). Order-independent
-    # training makes the layout free to choose.
-    corpus = corpus.repartition(
-        spark.sparkContext.defaultParallelism
-    ).localCheckpoint(eager=True)
-    _TRAINED_CACHE[key] = corpus
-    return corpus
+    checkpointed once per sf_dir — training re-scans it every Lloyd
+    round."""
+
+    def build():
+        full = _t(spark, sf_dir, "embeddings")
+        e = full.filter(F.col("vec_id") > 0).select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+        )
+        q0 = full.filter(F.col("vec_id") == 0).select("embedding")
+        # the deltas ride as DATA (a 10-row frame), not as expressions: an
+        # expression form (10 x 64 round(element_at)+lit terms) blew the
+        # JVM's 64 KB generated-method limit and silently fell back to
+        # interpreted evaluation. One cross join of the 1-row q0 scan
+        # against the 10-row delta frame + a zip_with keeps the plan tiny;
+        # the arithmetic (round(x, 9) + delta) is unchanged.
+        deltas_df = spark.createDataFrame(
+            [
+                (_AUD_BASE_ID + j + 1, _AUD_DELTAS[j])
+                for j in range(_AUD_NPLANT)
+            ],
+            "vec_id long, delta array<double>",
+        )
+        planted = q0.crossJoin(F.broadcast(deltas_df)).select(
+            "vec_id",
+            F.zip_with(
+                F.transform(
+                    F.col("embedding").cast("array<double>"),
+                    lambda x: F.round(x, 9),
+                ),
+                F.col("delta"),
+                lambda a, b: a + b,
+            ).alias("embedding"),
+        )
+        corpus = e.unionAll(planted)
+        # spread across every core before checkpointing: the union plan is
+        # (one parquet split) + 10 single-row legs = 11 partitions with one
+        # straggler carrying the whole corpus through the interpreted HOF
+        # distance folds (measured 16s -> ~4s at sf0.1). Order-independent
+        # training makes the layout free to choose.
+        return corpus.repartition(
+            spark.sparkContext.defaultParallelism
+        ).localCheckpoint(eager=True)
+
+    return memo(spark, ("audcorpus", sf_dir), build)
 
 
 def q171_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11314,14 +11270,15 @@ def q171_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = _aud_corpus(spark, sf_dir)
-    key = (id(spark), sf_dir, "audtrained")
-    if key not in _TRAINED_CACHE:
-        _TRAINED_CACHE[key] = ivfpq_train(
+    coarse, cbs = memo(
+        spark,
+        ("audtrained", sf_dir),
+        lambda: ivfpq_train(
             corpus, "embedding", "vec_id",
             dim=64, n_cells=_AUD_CELLS, m=_AUD_M, n_codes=_AUD_NCODES,
             coarse_iterations=_AUD_CIT, pq_iterations=_AUD_PIT,
-        )
-    coarse, cbs = _TRAINED_CACHE[key]
+        ),
+    )
     full = _t(spark, sf_dir, "embeddings")
     qvec = [
         float(x)
@@ -11952,10 +11909,6 @@ def q177_classifier_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode -> hash map side of BOTH the training and scoring legs
     # otherwise pipelines into the single-row-group scan (one task);
     # a no-op on many-split scans, results row-identical.
-    from jsonl_dataingestion_pipeline_spark.operators.common import (
-        parallelism_floor,
-    )
-
     lab = parallelism_floor(lab)
     w_u = train_classifier(
         lab, "text", "doc_id", "__y",
@@ -15841,7 +15794,7 @@ def q210_sft_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floor BEFORE the filters so the split/size filter and the HOF
     # sweep both run cluster-wide, not in the single scan task
     # (guide §2.5)
-    d = _floor(_t(spark, sf_dir, "documents")).filter(
+    d = parallelism_floor(_t(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
         & (~F.col("text").contains("  "))
         & (F.col("text") == F.trim(F.col("text")))
@@ -17000,7 +16953,7 @@ def q222_cdx_captures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # floor: the SURT canonicalizer is a regex-heavy projection over
     # 3x|docs| generated captures (guide §2.5)
-    d = _floor(_t(spark, sf_dir, "documents").select("doc_id"))
+    d = parallelism_floor(_t(spark, sf_dir, "documents").select("doc_id"))
     did = F.col("doc_id")
     site = (did % 25).cast("string")
     urla = F.concat(

@@ -18,15 +18,65 @@ so the two DuckDB-unrollable oracles can never drift apart. Every
 helper produces the EXACT expression tree (same op order, same casts)
 the loops previously built inline — the q177/q180 oracle matches are
 bit-for-bit unchanged.
+
+:func:`memo` is the engine's one driver-side cache: the shipment
+projections (Column trees that cost hundreds of py4j round-trips to
+build), the fuzzy-decontamination drop census, and the driver's shared
+checkpointed corpora and trained quantizers all live in it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import threading
+from collections import OrderedDict
+from typing import Any, Callable, Hashable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: the shared integer grid: state and residuals live in 1e-9 nano-units
 GD_GRID = 1e9
+
+#: entries :func:`memo` keeps before evicting the least recently used
+MEMO_SIZE = 256
+
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_LOCK = threading.Lock()
+
+
+def memo(spark: SparkSession, key: Hashable, build: Callable[[], Any]) -> Any:
+    """Return the value cached under ``(applicationId, key)``, calling
+    ``build()`` on a miss.
+
+    Keyed per Spark application: a stopped application's entries are
+    never returned to a new one, and they age out of the LRU. A hit
+    moves the entry to the back; an insert evicts from the front once
+    :data:`MEMO_SIZE` entries are held.
+
+    ``build`` runs outside the lock, so it may itself call :func:`memo`
+    and a slow build does not block other keys. When two threads miss
+    the same key at once (streaming ``foreachBatch``), both build and
+    both get the first value stored. ``key`` should start with a name
+    unique to the call site.
+    """
+    full = (spark.sparkContext.applicationId, key)
+    with _MEMO_LOCK:
+        if full in _MEMO:
+            _MEMO.move_to_end(full)
+            return _MEMO[full]
+    value = build()
+    with _MEMO_LOCK:
+        value = _MEMO.setdefault(full, value)
+        _MEMO.move_to_end(full)
+        while len(_MEMO) > MEMO_SIZE:
+            _MEMO.popitem(last=False)
+    return value
+
+
+def memo_clear() -> None:
+    """Drop every :func:`memo` entry."""
+    with _MEMO_LOCK:
+        _MEMO.clear()
 
 
 def pipeline_break(df: DataFrame, reliable: bool = False) -> DataFrame:

@@ -40,13 +40,9 @@ from jsonl_dataingestion_pipeline_spark.functions.textstats import (
     token_count,
     tokens,
 )
+from jsonl_dataingestion_pipeline_spark.operators.common import memo
 
 _LOG = logging.getLogger(__name__)
-
-# (benchmark semanticHash, text_col, id_col, shingle_k, max_bench_df)
-# -> hot-shingle count: funds fuzzy_decontaminate's drop log exactly
-# once per distinct benchmark plan (see the in-function note).
-_CAP_MEMO: dict = {}
 
 
 # ---------------------------------------------------------------------------
@@ -1062,24 +1058,16 @@ def fuzzy_decontaminate(
         # always current; a frame whose underlying files changed should
         # be re-created by the caller anyway (its cached plans would be
         # stale too).
-        key = (id(benchmark), text_col, id_col, shingle_k, max_bench_df)
-        if key not in _CAP_MEMO:
-            n_hot = b_stats.filter(
-                F.col("__df") > max_bench_df
-            ).count()
-            # bounded LRU: evict least-recently-used entries to make
-            # room BEFORE inserting (>= so steady-state capacity is
-            # exactly 256, not 257) instead of discarding every
-            # memoized census at once (ADVICE r7) — a dropped entry
-            # releases its benchmark frame (and JVM plan) while the
-            # hot ones stay warm
-            while len(_CAP_MEMO) >= 256:
-                _CAP_MEMO.pop(next(iter(_CAP_MEMO), None), None)
-            _CAP_MEMO[key] = (n_hot, benchmark)
-        else:
-            # move-to-end on hit so eviction order is true LRU
-            n_hot = _CAP_MEMO.pop(key)[0]
-            _CAP_MEMO[key] = (n_hot, benchmark)
+        key = (
+            "curation.hot_shingles", id(benchmark), text_col, id_col,
+            shingle_k, max_bench_df,
+        )
+
+        def census():
+            hot = b_stats.filter(F.col("__df") > max_bench_df).count()
+            return hot, benchmark
+
+        n_hot = memo(benchmark.sparkSession, key, census)[0]
         if n_hot:
             _LOG.warning(
                 "fuzzy_decontaminate: max_bench_df=%d dropped %d hot "

@@ -237,9 +237,6 @@ def dedup_by_key(
 # ---------------------------------------------------------------------------
 # Assembled derivation stage
 # ---------------------------------------------------------------------------
-_DERIVED_PROJECTION_CACHE: dict = {}
-
-
 def with_derived_columns(df: DataFrame, as_of: Column) -> DataFrame:
     """Apply D1-D7 over a cleaned, typed shipment DataFrame.
 
@@ -249,68 +246,47 @@ def with_derived_columns(df: DataFrame, as_of: Column) -> DataFrame:
     is a single ``withColumns``). Ordering mirrors the reference pipeline
     (`src/transformer.py:74-104`).
 
-    The Column trees are a pure function of (columns, as_of expression),
-    so they are memoized per application — same pattern and reason as
-    ``plans.shipment.clean_columns``.
-
-    Cache-key caveat (ADVICE r10): the as_of fingerprint is
-    ``str(as_of)``, and classic PySpark Column repr is not injective
-    (``F.lit("x")`` and ``F.col("x")`` can both render ``Column<'x'>``).
-    Pass ``as_of`` as a self-describing literal expression —
-    ``F.lit("2024-01-01").cast("date")`` / ``F.current_date()`` — never
-    a bare single-name ``F.col(...)`` that could collide with a
-    same-named literal; all in-repo callers do.
+    Not memoized: the trees are small, and a warm rebuild measured within
+    the spread of a cache hit.
     """
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
-        tuple(df.columns),
-        str(as_of),
+    c = F.col
+    optimal = {
+        "optimal_ata_dp_date": optimal_ata_dp(
+            c("ata_dp_date"), c("derived_ata_dp_date"), as_of
+        ),
+        "optimal_eta_fd_date": optimal_eta_fd(
+            c("predictive_eta_fd_date"), c("revised_eta_fd_date"), c("eta_fd_date")
+        ),
+    }
+    dp_label, dp_days = dp_delay(c("optimal_ata_dp_date"), c("eta_dp_date"), as_of)
+    fd_label, fd_days = fd_delay(
+        c("optimal_eta_fd_date"),
+        c("delivery_to_consignee_date"),
+        c("empty_container_return_date"),
+        as_of,
     )
-    cached = _DERIVED_PROJECTION_CACHE.get(cache_key)
-    if cached is None:
-        c = F.col
-        optimal = {
-            "optimal_ata_dp_date": optimal_ata_dp(
-                c("ata_dp_date"), c("derived_ata_dp_date"), as_of
-            ),
-            "optimal_eta_fd_date": optimal_eta_fd(
-                c("predictive_eta_fd_date"), c("revised_eta_fd_date"), c("eta_fd_date")
-            ),
-        }
-        dp_label, dp_days = dp_delay(c("optimal_ata_dp_date"), c("eta_dp_date"), as_of)
-        fd_label, fd_days = fd_delay(
-            c("optimal_eta_fd_date"),
-            c("delivery_to_consignee_date"),
-            c("empty_container_return_date"),
-            as_of,
-        )
-        group, tag = partition_tags(c("etd_lp_date"))
-        rest = {
-            "delayed_dp": dp_label,
-            "dp_delayed_dur": dp_days,
-            "delayed_fd": fd_label,
-            "fd_delayed_dur": fd_days,
-            "shipment_status": shipment_status(
-                empty_return=c("empty_container_return_date"),
-                delivery=c("delivery_to_consignee_date"),
-                out_gate_last_cy=c("out_gate_at_last_cy_date"),
-                arrived_last_cy=c("equipment_arrived_at_last_cy_date"),
-                optimal_ata_dp_date=c("optimal_ata_dp_date"),
-                atd_flp=c("atd_flp_date"),
-                ata_flp=c("ata_flp_date"),
-                atd_lp=c("atd_lp_date"),
-                etd_lp=c("etd_lp_date"),
-                as_of=as_of,
-            ),
-            "workflow_gap_flags": workflow_gap_flag(
-                c("delivery_to_consignee_date"), c("empty_container_return_date")
-            ),
-            "source_group": group,
-            "source_month_tag": tag,
-        }
-        cached = (optimal, rest)
-        while len(_DERIVED_PROJECTION_CACHE) >= 8:  # bound: evict oldest
-            _DERIVED_PROJECTION_CACHE.pop(next(iter(_DERIVED_PROJECTION_CACHE), None), None)
-        _DERIVED_PROJECTION_CACHE[cache_key] = cached
-    optimal, rest = cached
+    group, tag = partition_tags(c("etd_lp_date"))
+    rest = {
+        "delayed_dp": dp_label,
+        "dp_delayed_dur": dp_days,
+        "delayed_fd": fd_label,
+        "fd_delayed_dur": fd_days,
+        "shipment_status": shipment_status(
+            empty_return=c("empty_container_return_date"),
+            delivery=c("delivery_to_consignee_date"),
+            out_gate_last_cy=c("out_gate_at_last_cy_date"),
+            arrived_last_cy=c("equipment_arrived_at_last_cy_date"),
+            optimal_ata_dp_date=c("optimal_ata_dp_date"),
+            atd_flp=c("atd_flp_date"),
+            ata_flp=c("ata_flp_date"),
+            atd_lp=c("atd_lp_date"),
+            etd_lp=c("etd_lp_date"),
+            as_of=as_of,
+        ),
+        "workflow_gap_flags": workflow_gap_flag(
+            c("delivery_to_consignee_date"), c("empty_container_return_date")
+        ),
+        "source_group": group,
+        "source_month_tag": tag,
+    }
     return df.withColumns(optimal).withColumns(rest)

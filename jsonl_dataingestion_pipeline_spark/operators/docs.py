@@ -15,22 +15,18 @@ it deterministic with ``row_number`` over an explicit ordering inside each
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import nonblank
+from .common import memo
 
 _METADATA_EXCLUDED = ("carr_eqp_uid", "consignee_raw", "combined_content")
-
-_DOC_PROJECTION_CACHE: dict = {}
 
 
 def normalize_documents(
     df: DataFrame,
     *,
-    id_fallback_order: Optional[Sequence[str]] = None,
     with_doc_index_fallback: bool = True,
     legacy_repr_consignee_code: bool = False,
 ) -> DataFrame:
@@ -45,27 +41,32 @@ def normalize_documents(
     ``legacy_repr_consignee_code=True`` to get that exact string form.
 
     The output projection (dominated by the ~100-field metadata struct)
-    is a pure function of (columns, flags) and memoized per application —
-    same pattern/reason as ``plans.shipment.clean_columns``.
+    is a pure function of (columns, flags), so it is memoized.
     """
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
+
+    def build():
+        return _document_projection(
+            df.columns, with_doc_index_fallback, legacy_repr_consignee_code
+        )
+
+    key = (
+        "docs",
         tuple(df.columns),
-        tuple(id_fallback_order) if id_fallback_order is not None else None,
         with_doc_index_fallback,
         legacy_repr_consignee_code,
     )
-    cached = _DOC_PROJECTION_CACHE.get(cache_key)
-    if cached is not None:
-        return df.select(*cached)
-    cols = set(df.columns)
+    return df.select(*memo(df.sparkSession, key, build))
+
+
+def _document_projection(
+    columns: list, with_doc_index_fallback: bool, legacy_repr_consignee_code: bool
+) -> list:
+    cols = set(columns)
 
     def opt(name: str):
         return nonblank(F.col(f"`{name}`")) if name in cols else F.lit(None).cast("string")
 
-    if id_fallback_order is None:
-        id_fallback_order = ("carr_eqp_uid", "job_no", "container_number")
-    id_chain = [opt(name) for name in id_fallback_order]
+    id_chain = [opt(name) for name in ("carr_eqp_uid", "job_no", "container_number")]
     if with_doc_index_fallback:
         order_cols = [F.col(c) for c in ("container_number", "job_no") if c in cols]
         if not order_cols:
@@ -96,12 +97,12 @@ def normalize_documents(
 
     metadata_fields = [
         F.col(f"`{c}`").alias(c)
-        for c in df.columns
+        for c in columns
         if c not in _METADATA_EXCLUDED and c != "consignee_codes"
     ]
     metadata = F.struct(*metadata_fields, codes.alias("consignee_codes"))
 
-    projection = [
+    return [
         F.coalesce(*id_chain).alias("document_id"),
         content.alias("content"),
         metadata.alias("metadata"),
@@ -112,12 +113,6 @@ def normalize_documents(
             else []
         ),
     ]
-    while len(_DOC_PROJECTION_CACHE) >= 8:  # bound: evict oldest entry
-        # race-tolerant (ADVICE r10): a concurrent evictor may have
-        # emptied the dict between len() and here
-        _DOC_PROJECTION_CACHE.pop(next(iter(_DOC_PROJECTION_CACHE), None), None)
-    _DOC_PROJECTION_CACHE[cache_key] = projection
-    return df.select(*projection)
 
 
 def validate_documents(df: DataFrame) -> DataFrame:

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import nonblank
 from ..functions.dates import fmt_display, fmt_iso
+from .common import memo
 
 
 def _opt(cond: Column, *parts: Column | str) -> Column:
@@ -414,23 +415,13 @@ def milestones(df_cols: dict[str, Column], as_of: Column) -> Column:
     return F.concat_ws(" || ", header, leg1, leg2, leg3, leg4, leg5)
 
 
-_MILESTONES_CACHE: dict = {}
-
-
 def with_milestones(df: DataFrame, as_of: Column) -> DataFrame:
     # The T6 narrative is a ~300-node Column tree; construction is pure
     # py4j chatter determined by (schema, as_of expression), so the tree
-    # is memoized per Spark application — see content.combined_content.
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
-        tuple(df.columns),
-        str(as_of),
-    )
-    col = _MILESTONES_CACHE.get(cache_key)
-    if col is None:
-        cols = {name: F.col(f"`{name}`") for name in df.columns}
-        col = milestones(cols, as_of)
-        while len(_MILESTONES_CACHE) >= 8:  # bound: evict oldest entry
-            _MILESTONES_CACHE.pop(next(iter(_MILESTONES_CACHE), None), None)
-        _MILESTONES_CACHE[cache_key] = col
-    return df.withColumn("milestones", col)
+    # is memoized — see content.combined_content and, for the as_of
+    # key, plans.shipment.with_summaries.
+    def build():
+        return milestones({name: F.col(f"`{name}`") for name in df.columns}, as_of)
+
+    key = ("narrative.milestones", tuple(df.columns), str(as_of))
+    return df.withColumn("milestones", memo(df.sparkSession, key, build))

@@ -21,6 +21,7 @@ from ..functions.consignee import consignee_codes_list, extract_consignee_name
 from ..functions.dates import parse_date_dayfirst, parse_multi_dates
 from ..operators import content as content_op
 from ..operators import narrative
+from ..operators.common import memo, parallelism_floor
 from ..operators.derivations import dedup_by_key, with_derived_columns
 from ..operators.docs import normalize_documents
 from ..operators.summaries import (
@@ -51,9 +52,6 @@ def _as_of_col(as_of: AsOf) -> Column:
     return F.lit(str(as_of)).cast("date")
 
 
-_CLEAN_PROJECTION_CACHE: dict = {}
-
-
 def clean_columns(df: DataFrame) -> DataFrame:
     """F1-F6 typing pass over the canonical all-string frame.
 
@@ -63,86 +61,64 @@ def clean_columns(df: DataFrame) -> DataFrame:
     transformer per SURVEY.md §7.3.2.
 
     The ~100 cleaning expressions are a pure function of the column list,
-    so the projection is memoized per (Spark application, columns) —
-    building it is ~2.5 s of py4j round-trips otherwise (driver-side,
-    data-independent; see operators/content.py for the same pattern).
+    so the projection is memoized (:func:`operators.common.memo`): a
+    rebuild costs about 1 s of py4j round-trips more than a hit.
     """
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
-        tuple(df.columns),
-    )
-    cached = _CLEAN_PROJECTION_CACHE.get(cache_key)
-    if cached is not None:
-        return df.select(*cached)
-    multi_dates = set(MULTI_VALUED_DATE_COLS)
-    multi_ids = set(MULTI_VALUED_ID_COLS)
-    booleans = set(BOOLEAN_COLUMNS)
-    dates = set(DATE_COLUMNS)
-    ids = set(ID_COLUMNS)
 
-    projection = []
-    for name in df.columns:
-        c = F.col(f"`{name}`")
-        if name in dates and name in multi_dates:
-            expr = parse_multi_dates(clean_string(c))
-        elif name in dates:
-            expr = parse_date_dayfirst(clean_string(c))
-        elif name in booleans:
-            expr = coerce_boolean(c)
-        elif name in multi_ids:
-            expr = split_multi_ids(ensure_str_id(clean_string(c)))
-        elif name in ids:
-            expr = ensure_str_id(clean_string(c))
-        else:
-            expr = clean_string(c)
-        projection.append(expr.alias(name))
-    while len(_CLEAN_PROJECTION_CACHE) >= 8:  # bound: evict oldest entry
-        _CLEAN_PROJECTION_CACHE.pop(next(iter(_CLEAN_PROJECTION_CACHE), None), None)
-    _CLEAN_PROJECTION_CACHE[cache_key] = projection
-    return df.select(*projection)
+    def build():
+        multi_dates = set(MULTI_VALUED_DATE_COLS)
+        multi_ids = set(MULTI_VALUED_ID_COLS)
+        booleans = set(BOOLEAN_COLUMNS)
+        dates = set(DATE_COLUMNS)
+        ids = set(ID_COLUMNS)
+        projection = []
+        for name in df.columns:
+            c = F.col(f"`{name}`")
+            if name in dates and name in multi_dates:
+                expr = parse_multi_dates(clean_string(c))
+            elif name in dates:
+                expr = parse_date_dayfirst(clean_string(c))
+            elif name in booleans:
+                expr = coerce_boolean(c)
+            elif name in multi_ids:
+                expr = split_multi_ids(ensure_str_id(clean_string(c)))
+            elif name in ids:
+                expr = ensure_str_id(clean_string(c))
+            else:
+                expr = clean_string(c)
+            projection.append(expr.alias(name))
+        return projection
 
-
-_CONSIGNEE_PROJECTION_CACHE: dict = {}
+    key = ("shipment.clean", tuple(df.columns))
+    return df.select(*memo(df.sparkSession, key, build))
 
 
 def with_consignee(df: DataFrame) -> DataFrame:
-    """F7/F8 — consignee_name + consignee_codes list from consignee_raw.
-
-    Column trees memoized per application (same pattern/reason as
-    ``clean_columns``).
-    """
+    """F7/F8 — consignee_name + consignee_codes list from consignee_raw."""
     if "consignee_raw" not in df.columns:
         return df
-    cache_key = df.sparkSession.sparkContext.applicationId
-    cols = _CONSIGNEE_PROJECTION_CACHE.get(cache_key)
-    if cols is None:
-        src = F.col("consignee_raw")
-        cols = {
+    src = F.col("consignee_raw")
+    return df.withColumns(
+        {
             "consignee_name": extract_consignee_name(src),
             "consignee_codes": consignee_codes_list(src),
         }
-        while len(_CONSIGNEE_PROJECTION_CACHE) >= 8:  # bound: evict oldest
-            _CONSIGNEE_PROJECTION_CACHE.pop(next(iter(_CONSIGNEE_PROJECTION_CACHE), None), None)
-        _CONSIGNEE_PROJECTION_CACHE[cache_key] = cols
-    return df.withColumns(cols)
-
-
-_SUMMARY_PROJECTION_CACHE: dict = {}
+    )
 
 
 def with_summaries(df: DataFrame, as_of: Column) -> DataFrame:
     """T1-T5 summary columns.
 
-    Column trees memoized per (application, as_of expression) — they read
-    a fixed set of column names, so the input schema does not shape them.
-    Same pattern/reason as ``clean_columns``.
+    Column trees memoized per as_of expression: they read a fixed set of
+    column names, so the input schema does not shape them. The key holds ``str(as_of)``, and Column repr is not
+    injective (``F.lit("x")`` and ``F.col("x")`` can both render
+    ``Column<'x'>``): pass ``as_of`` as a self-describing expression such
+    as ``F.lit("2024-01-01").cast("date")``, as ``_as_of_col`` does.
     """
-    cache_key = (df.sparkSession.sparkContext.applicationId, str(as_of))
-    cols = _SUMMARY_PROJECTION_CACHE.get(cache_key)
-    if cols is not None:
-        return df.withColumns(cols)
-    c = F.col
-    cols = {
+
+    def build():
+        c = F.col
+        return {
             "critical_dates_summary": critical_dates_summary(
                 place_of_receipt=c("place_of_receipt"),
                 load_port=c("load_port"),
@@ -182,11 +158,10 @@ def with_summaries(df: DataFrame, as_of: Column) -> DataFrame:
                 c("place_of_delivery"),
                 c("final_destination"),
             ),
-    }
-    while len(_SUMMARY_PROJECTION_CACHE) >= 8:  # bound: evict oldest
-        _SUMMARY_PROJECTION_CACHE.pop(next(iter(_SUMMARY_PROJECTION_CACHE), None), None)
-    _SUMMARY_PROJECTION_CACHE[cache_key] = cols
-    return df.withColumns(cols)
+        }
+
+    key = ("shipment.summaries", str(as_of))
+    return df.withColumns(memo(df.sparkSession, key, build))
 
 
 def transform_shipments(
@@ -207,8 +182,6 @@ def transform_shipments(
     # row); pipelined into a few-split scan it runs on that few tasks.
     # Repartition to defaultParallelism only when the input has fewer
     # partitions — a no-op on a real many-split scan.
-    from ..operators.common import parallelism_floor
-
     df = parallelism_floor(df)
     out = clean_columns(df)
     if dedup_key:

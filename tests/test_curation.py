@@ -944,18 +944,18 @@ def test_dedup_lines_group_scoped_census(spark):
     assert out[4][0] == "unique line\nmore text"
 
 
-def test_fuzzy_decontaminate_memo_evicts_lru_not_all(spark):
-    """ADVICE r7: the drop-census memo evicts ONE least-recently-used
-    entry past capacity instead of clearing every memoized census."""
+def test_fuzzy_decontaminate_memo_evicts_lru_not_all(spark, monkeypatch):
+    """The drop census lives in the shared memo: inserting it into a
+    full memo evicts ONE least-recently-used entry instead of clearing
+    every memoized value."""
+    from jsonl_dataingestion_pipeline_spark.operators import common
     from jsonl_dataingestion_pipeline_spark.operators import curation as cu
 
-    saved = dict(cu._CAP_MEMO)
-    cu._CAP_MEMO.clear()
+    monkeypatch.setattr(common, "MEMO_SIZE", 8)
+    common.memo_clear()
     try:
-        # fill past capacity with synthetic entries
-        for i in range(257):
-            cu._CAP_MEMO[("k", i)] = (i, None)
-        # touch the oldest so it becomes most-recent
+        for i in range(8):
+            common.memo(spark, ("k", i), lambda i=i: i)
         bench = spark.createDataFrame(
             [(1, "alpha beta gamma delta epsilon zeta")],
             "id long, text string",
@@ -967,16 +967,15 @@ def test_fuzzy_decontaminate_memo_evicts_lru_not_all(spark):
         cu.fuzzy_decontaminate(
             cand, bench, "text", "id", shingle_k=3, max_bench_df=1
         ).collect()
-        # one real entry appended; only the OLDEST synthetic entries
-        # were evicted to make room (cap is exactly 256) — the memo
-        # never collapsed to 1
-        assert len(cu._CAP_MEMO) == 256
-        assert ("k", 0) not in cu._CAP_MEMO
-        assert ("k", 1) not in cu._CAP_MEMO
-        assert ("k", 256) in cu._CAP_MEMO
+        app = spark.sparkContext.applicationId
+        keys = [k for _app, k in common._MEMO]
+        assert len(keys) == 8
+        assert ("k", 0) not in keys
+        assert ("k", 1) in keys and ("k", 7) in keys
+        assert keys[-1][0] == "curation.hot_shingles"
+        assert all(a == app for a, _k in common._MEMO)
     finally:
-        cu._CAP_MEMO.clear()
-        cu._CAP_MEMO.update(saved)
+        common.memo_clear()
 
 
 class TestDuplicateSubstringSpans:

@@ -121,8 +121,11 @@ def test_dsir_weights_partition_count_invariant(spark):
 def test_rolling_stats_grid_mean_partition_invariant(spark):
     """rolling_stats(value_grid=2): cent-grid values with EQUAL
     timestamps inside one frame (no deterministic peer order) must give
-    identical means under any partitioning."""
+    identical means under any partitioning. Every fifth value is NULL:
+    the mean divides by the frame's non-NULL count, as ``avg`` does, and
+    matches a Python replay of the same float op chain."""
     import datetime
+    from decimal import ROUND_HALF_UP, Decimal
 
     from jsonl_dataingestion_pipeline_spark.operators.timeseries import (
         rolling_stats,
@@ -141,7 +144,9 @@ def test_rolling_stats_grid_mean_partition_invariant(spark):
                         eid,
                         k,
                         base + datetime.timedelta(seconds=60 * (t % 7)),
-                        round(((eid * 37) % 1000) / 100.0, 2),
+                        None
+                        if eid % 5 == 0
+                        else round(((eid * 37) % 1000) / 100.0, 2),
                     )
                 )
     results = []
@@ -158,6 +163,22 @@ def test_rolling_stats_grid_mean_partition_invariant(spark):
         )
         results.append(out)
     assert results[0] == results[1] == results[2]
+
+    def replay(e, k, ts):
+        cents = [
+            round(v * 100)
+            for _, k2, ts2, v in rows
+            if k2 == k and 0 <= (ts - ts2).total_seconds() <= 120
+            and v is not None
+        ]
+        mean = float(sum(cents)) / 100.0 / float(len(cents))
+        # Spark's ROUND: HALF_UP on the shortest repr of the double
+        return float(
+            Decimal(repr(mean)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+        )
+
+    expected = sorted((e, replay(e, k, ts)) for e, k, ts, _ in rows)
+    assert [(r[0], r[2]) for r in results[0]] == expected
 
 
 def test_pagerank_reround_partition_invariant(spark):

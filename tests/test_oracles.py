@@ -3,11 +3,10 @@
 Catches registration mistakes (missing oracle, missing shape, SQL that
 DuckDB cannot even bind) in seconds, long before the full gate runs.
 
-The DYNAMIC half of the gate contract lives in
-tests/test_determinism.py (VERDICT r6 item 1): the ANN batteries are
-re-run across shuffle layouts with retraining forced and must produce
-bit-identical multisets, and the two recall audits carry measured-band (0.85/0.9)
-floors on their planted corpora.
+The dynamic checks are elsewhere: tests/test_determinism.py re-runs the
+float-sum sites at 1/8/32 input partitions and asserts bit-identical
+output. The ANN cross-layout multiset gate and the q170/q171 recall
+floors that file once carried are not currently in the suite.
 """
 from __future__ import annotations
 

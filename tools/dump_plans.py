@@ -1,15 +1,29 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for representative
-queries, so the scale claims in SCALING.md can be checked against the
-actual Catalyst output without running anything.
+"""Dump formatted physical plans, so plan claims can be checked against
+the actual Catalyst output without running Spark.
 
-Usage: python tools/dump_plans.py [sf_dir]
+    python tools/dump_plans.py [SF_DIR]
+        Regenerate PLANS.md from the representative queries in PICKS (the
+        evidence for the scale claims in SCALING.md).
+
+    python tools/dump_plans.py --probe SF_DIR [--tag T] [--runs N]
+            [--plan-only] QUERY...
+        Write each query's plan to ``plans/<round>/<query>_<tag>.txt``
+        (round: ``$SPARK_GRAFT_PLANS_ROUND``, default r11) and, unless
+        ``--plan-only``, time it into the ``noop`` sink the way bench.py
+        does: codegen warmup on the sibling ``sf0.001`` tables, then the
+        min over N runs (default 2) with per-run /proc/stat steal. Prints
+        one JSON line per query. Spark runs on ``local[$SPARK_GRAFT_CPUS]``
+        (default 32).
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -129,7 +143,98 @@ PICKS = [
 ]
 
 
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _steal_ticks() -> int:
+    try:
+        with open("/proc/stat") as f:
+            parts = f.readline().split()
+        return int(parts[8])
+    except (OSError, IndexError, ValueError):
+        return -1
+
+
+def probe(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser(prog="dump_plans.py --probe")
+    ap.add_argument("sf_dir")
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("--plan-only", action="store_true")
+    args = ap.parse_args(argv)
+
+    import __spark_entry__ as em
+    from jsonl_dataingestion_pipeline_spark import get_spark
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark(
+        app_name="plan_probe",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM", "8g"
+            ),
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = em.queries_full()
+    plans_dir = os.path.join(
+        REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r11")
+    )
+    os.makedirs(plans_dir, exist_ok=True)
+    tick_hz = float(os.sysconf("SC_CLK_TCK"))
+    warm_sf = os.path.join(os.path.dirname(args.sf_dir.rstrip("/")), "sf0.001")
+
+    for name in args.queries:
+        fn = qs[name]
+        if not args.plan_only and os.path.isdir(warm_sf):
+            try:
+                fn(spark, warm_sf).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            except Exception as e:
+                print(f"# warmup FAILED {name}: {e}", file=sys.stderr)
+        with open(
+            os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w"
+        ) as f:
+            f.write(_formatted(fn(spark, args.sf_dir)))
+        if args.plan_only:
+            print(json.dumps({"query": name, "tag": args.tag, "plan": "ok"}),
+                  flush=True)
+            continue
+        walls, steals = [], []
+        for _ in range(args.runs):
+            spark.sparkContext.setJobDescription(f"probe:{name}")
+            st0 = _steal_ticks()
+            t0 = time.time()
+            fn(spark, args.sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            walls.append(round(time.time() - t0, 3))
+            st1 = _steal_ticks()
+            steals.append(
+                round((st1 - st0) / tick_hz, 2)
+                if st0 >= 0 and st1 >= 0 else -1.0
+            )
+            spark.sparkContext.setJobDescription(None)
+        print(json.dumps({
+            "query": name, "tag": args.tag, "noop_sec": min(walls),
+            "runs": walls, "steal_s": steals, "sf_dir": args.sf_dir,
+        }), flush=True)
+    spark.stop()
+    return 0
+
+
 def main() -> int:
+    if sys.argv[1:2] == ["--probe"]:
+        return probe(sys.argv[2:])
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as em
     from jsonl_dataingestion_pipeline_spark import get_spark
@@ -142,9 +247,6 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = em.queries_full()
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
 
     out = [
         "# PLANS — formatted physical plans (generated by tools/dump_plans.py)",
@@ -157,7 +259,7 @@ def main() -> int:
     ]
     for name, why in PICKS:
         df = qs[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(jmode)
+        plan = _formatted(df)
         blocks = plan.split("\n\n")
         tree = blocks[0]
         scans = [b for b in blocks[1:] if "Scan parquet" in b.split("\n", 1)[0]]

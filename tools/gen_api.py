@@ -36,7 +36,8 @@ def sig_of(fn: ast.FunctionDef) -> str:
     return f"{fn.name}({', '.join(parts)})"
 
 
-def main() -> int:
+def render() -> str:
+    """API.md's full text."""
     out = [
         "# API — public surface of `jsonl_dataingestion_pipeline_spark`",
         "",
@@ -75,9 +76,14 @@ def main() -> int:
                 if mod_doc:
                     out += [mod_doc, ""]
                 out += rows + [""]
+    return "\n".join(out)
+
+
+def main() -> int:
+    text = render()
     with open(os.path.join(REPO, "API.md"), "w") as fh:
-        fh.write("\n".join(out))
-    print(f"wrote API.md ({len(out)} lines)")
+        fh.write(text)
+    print(f"wrote API.md ({len(text.splitlines())} lines)")
     return 0
 
 

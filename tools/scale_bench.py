@@ -169,6 +169,7 @@ def run_queries(spark, sf_dir: str, k: int, only: list[str] | None = None) -> di
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entry
+    from jsonl_dataingestion_pipeline_spark.operators.common import memo_clear
     from jsonl_dataingestion_pipeline_spark.operators.curation import (
         duplicated_spans,
     )
@@ -1090,9 +1091,9 @@ def run_queries(spark, sf_dir: str, k: int, only: list[str] | None = None) -> di
         # ANN recall audit over the scaled embeddings: training is
         # constant-cost (4 cells / 8 codes over driver-held rounds),
         # the exact and ADC sides are single scans -> const 1-row
-        # output, wall must track the scan. Clears the trained-
-        # quantizer cache so each scale trains on ITS corpus.
-        entry._TRAINED_CACHE.clear()
+        # output, wall must track the scan. Clears the memo so
+        # each scale trains on ITS corpus.
+        memo_clear()
         return entry.q171_ann_recall_audit(spark, sf_dir)
 
     def q172_scaled(spark, sf_dir):
